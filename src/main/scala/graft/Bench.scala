@@ -3,15 +3,23 @@ package graft
 /** Benchmark main: one JSON line with per-query wall times on
   * SPARK_GRAFT_SF_DIR. Each query gets an untimed warm-up execution first
   * so the reported numbers measure engine throughput (steady-state plans,
-  * JIT'd codegen), not JVM/classloader warm-up. */
+  * JIT'd codegen), not JVM/classloader warm-up. A query that throws in
+  * any pass gets no time: it is listed under `failed` and left out of
+  * `queries` and the total. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.build("graft-bench")
 
-    def exec(name: String): Long =
-      try SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
-      catch { case _: Throwable => -1L }
+    // false iff the query threw (see the scaladoc: no time, "failed")
+    def exec(name: String): Boolean =
+      try {
+        SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
+        true
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        false
+      }
 
     // some queries cache intermediates; drop them between queries so 60+
     // queries in one JVM don't accumulate storage memory — but OUTSIDE
@@ -53,36 +61,44 @@ object Bench {
     // adding a BPE query can never silently shift the billing. Everything
     // else still pays its full standalone cost via reset() between
     // queries.
-    def timedPass(): (Map[String, Double], Double) = {
+    def timedPass(): (Map[String, Double], Set[String], Double) = {
       graft.queries.BpeQueries.evictTrainMemo()
       val bt0 = System.nanoTime()
-      try graft.queries.BpeQueries.trainedFor(spark, sfDir,
-        graft.queries.BpeQueries.NumMerges, graft.ops.Bpe.DefaultDictCap)
-        ._2.queryExecution.toRdd.count()
-      catch { // consumers then bill their own run — but say so: a silent
-        // swallow would record a bogus bpe_train time with no signal
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] bpe_train failed: ${e.getMessage}")
-      }
+      val bpeOk =
+        try {
+          graft.queries.BpeQueries.trainedFor(spark, sfDir,
+            graft.queries.BpeQueries.NumMerges, graft.ops.Bpe.DefaultDictCap)
+            ._2.queryExecution.toRdd.count()
+          true
+        } catch { // consumers then bill their own run; bpe_train is failed
+          case scala.util.control.NonFatal(e) =>
+            System.err.println(s"[bench] bpe_train failed: ${e.getMessage}")
+            false
+        }
       val bpeDt = (System.nanoTime() - bt0) / 1e9
       reset() // the memoized dict is localCheckpoint'd; it survives this
-      (names.map { name =>
-      val t0 = System.nanoTime()
-      exec(name)
-      val dt = (System.nanoTime() - t0) / 1e9
-      reset()
-      name -> dt
-    }.toMap + ("bpe_train" -> bpeDt), calibrate())
+      val runs = names.map { name =>
+        val t0 = System.nanoTime()
+        val ok = exec(name)
+        val dt = (System.nanoTime() - t0) / 1e9
+        reset()
+        (name, ok, dt)
+      } :+ (("bpe_train", bpeOk, bpeDt))
+      (runs.collect { case (n, true, dt) => n -> dt }.toMap,
+        runs.collect { case (n, false, _) => n }.toSet, calibrate())
     }
     // several timed passes, report the per-query minimum — local-mode wall
     // times on shared hardware are noisy and min is the robust statistic
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
     val all = (1 to math.max(passes, 1)).map(_ => timedPass())
+    // a query that threw in ANY pass has no trustworthy time
+    val failed = all.flatMap(_._2).toSet
     // `bpe_train` is the explicit shared-training line item from
     // timedPass — reported like any query so vs_prev gates cover it
     val reportNames = names :+ "bpe_train"
-    val results = reportNames.map(n => n -> all.map(_._1(n)).min)
-    val calib = all.map(_._2).min
+    val results = reportNames.filterNot(failed)
+      .map(n => n -> all.map(_._1(n)).min)
+    val calib = all.map(_._3).min
     val loadavg = {
       val la = java.lang.management.ManagementFactory
         .getOperatingSystemMXBean.getSystemLoadAverage
@@ -91,6 +107,8 @@ object Bench {
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
+    val failedJson = reportNames.filter(failed).map("\"" + _ + "\"")
+      .mkString("[", ",", "]")
     // prior-round comparison, embedded so the round record is
     // self-sufficient even if the driver's stdout tail-capture truncates:
     // read the previous bench_results.json total before overwriting it
@@ -151,7 +169,7 @@ object Bench {
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","passes":$passes,""" +
         s""""calib":${f"$calib%.3f"},"loadavg":$loadavg,""" +
-        s""""queries":$qs,"sf":"$sfDir"$prevJson$ratiosJson}"""
+        s""""queries":$qs,"failed":$failedJson,"sf":"$sfDir"$prevJson$ratiosJson}"""
     println(json)
     // also persist the full line: the driver's stdout tail-capture has
     // truncated the head of the per-query map in past rounds — the file

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import graft.ops.LlmBoundary.JsonMini.quote
+
 /** Dev-only single-query Verify: dump one or more named registry queries
   * (plus their oracle SQL) in the same layout Verify writes, so
   * dev/check_oracle.py can compare a subset without a full-registry run.
@@ -21,17 +23,8 @@ object DevQuery {
         .parquet(s"$outDir/$name")
       spark.catalog.clearCache()
     }
-    def esc(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = names.flatMap(n => queries.Registry.byName(n).oracle.map(n -> _))
-      .map { case (k, v) => s"${esc(k)}: ${esc(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${quote(k)}: ${quote(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -605,11 +605,17 @@ object TextFunctions {
   val gramHashesBuilder: Seq[Expression] => Expression = exprs => {
     require(exprs.length == 4,
       s"graft_gram_hashes expects (text, k, clip, hex), got ${exprs.length} arguments")
-    def lt[T](e: Expression, what: String, f: String => T): T = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v, _) =>
-        f(v.toString)
-      case other => throw new IllegalArgumentException(
-        s"graft_gram_hashes $what must be a literal, got $other")
+    // a NULL literal or an unparseable one (k = 3.0, hex = 'yes') gets
+    // the same descriptive error as a non-literal argument
+    def lt[T](e: Expression, what: String, f: String => T): T = {
+      def bad = new IllegalArgumentException(
+        s"graft_gram_hashes $what must be a non-null literal of its type, got $e")
+      e match {
+        case org.apache.spark.sql.catalyst.expressions.Literal(v, _)
+            if v != null =>
+          try f(v.toString) catch { case _: IllegalArgumentException => throw bad }
+        case _ => throw bad
+      }
     }
     GramHashesExpr(exprs.head, lt(exprs(1), "k", _.toInt),
       lt(exprs(2), "clip", _.toBoolean), lt(exprs(3), "hex", _.toBoolean))

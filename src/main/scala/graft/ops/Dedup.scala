@@ -39,10 +39,15 @@ object Dedup {
     * density ~2/(win+1) instead of every gram — the local-similarity
     * detector plagiarism/citation pipelines deploy.
     *
-    * Scale shape: per-row gram explode (win-bounded window fan-out, no
-    * joins), one window ranked per (doc, window-end) — each partition
-    * group holds ≤ win rows, massively parallel, never a per-doc
-    * history. Hashes are md5-derived so any engine re-derives them:
+    * Scale shape: per-row gram explode (no joins, no fan-out), then a
+    * sliding-window min over each document's gram stream — one shuffle
+    * of 1× the grams hashed on doc_id and one per-document sort by
+    * position. Every gram of a document lands in ONE task, so the skew
+    * bound is the largest document: a corpus of ordinary documents
+    * spreads across tasks, but one book-length document is a single
+    * task's O(g log g) sort over its g grams that no partition count can
+    * split — it straggles in proportion to its own length, never the
+    * corpus's. Hashes are md5-derived so any engine re-derives them:
     * the first 15 hex chars = 60 bits, always-positive BIGINT. The
     * width matters at corpus scale — a 32-bit hash collides random
     * unrelated grams past ~77k distinct grams (birthday bound),

@@ -15,6 +15,11 @@ import graft.functions.GraftFunctions
   * N² to Σ bucket². Hyperplanes are generated from a fixed seed on the
   * driver and broadcast as literals — deterministic across runs and
   * engines, no fit/model state.
+  *
+  * Every top-k entry point is candidates × codec × one top-k: a private
+  * candidate generator (broadcast all-pairs, LSH bucket join, IVF cell
+  * equi-join) crossed with a private resident codec (f64, int8, PQ,
+  * residual PQ), ranked by one shared tail.
   */
 object VectorSearch {
 
@@ -127,6 +132,149 @@ object VectorSearch {
     tbl === firstMatch
   }
 
+  // ---- ANN skeleton: candidates × codec × one top-k ----------------------
+  //
+  // A generator pairs corpus rows with query rows; a codec decides what
+  // each side carries into that join and how a pair scores. The two are
+  // independent axes: a resident representation never dictates how its
+  // candidates are found.
+
+  /** A resident codec. `corpus` / `query` add each side's scoring columns
+    * (keeping idCol and vecCol for the generator); `cCols` / `qCols` are
+    * what each side carries into the candidate join; `perProbe` adds
+    * per-(query, probed cell) columns on the IVF query side; `scores`
+    * evaluate in order over a candidate pair (a later one may read an
+    * earlier one) and the LAST one ranks. */
+  private case class Codec(corpus: DataFrame => DataFrame,
+      cCols: Seq[Column], query: DataFrame => DataFrame, qCols: Seq[Column],
+      scores: Seq[(String, Column)], perProbe: Seq[(String, Column)] = Nil)
+
+  private def norm(v: Column): Column = sqrt(GraftFunctions.dotProduct(v, v))
+
+  /** f64: exact cosine over the raw vectors and one norm per side. */
+  private def f64Codec(vecCol: String): Codec = Codec(
+    _.withColumn("nrm", norm(col(vecCol))), Seq(col(vecCol), col("nrm")),
+    _.withColumn("qnrm", norm(col(vecCol))),
+    Seq(col(vecCol).as("qvec"), col("qnrm")),
+    Seq("cosine" -> GraftFunctions.dotProduct(col("qvec"), col(vecCol)) /
+      (col("qnrm") * col("nrm"))))
+
+  /** int8: [[quantizeInt8]] codes on both sides; the exact integer dot
+    * rescales to cosine over the DEquantized dot, (dot_q·sa·sb)/(|a||b|),
+    * with norms from the original floats. */
+  private def int8Codec(vecCol: String): Codec = Codec(
+    quantizeInt8(_, vecCol).withColumn("nrm", norm(col(vecCol))),
+    Seq(col("q"), col("scale"), col("nrm")),
+    quantizeInt8(_, vecCol).withColumn("qnrm", norm(col(vecCol))),
+    Seq(col("q").as("qq"), col("scale").as("qscale"), col("qnrm")),
+    Seq("dot_q" -> quantizedDot("qq", "q"),
+      "qcos" -> col("dot_q").cast("double") * col("qscale") * col("scale") /
+        (col("qnrm") * col("nrm"))))
+
+  /** PQ: corpus rows resident as m byte codes of `encCol` plus the
+    * reconstruction norm ([[pqEncode]]); each query builds its integer
+    * LUTs over the RAW `vecCol` once, before any candidate expansion;
+    * a pair scores by ADC ([[pqAdcFp]], [[adcCosineGuarded]]). */
+  private def pqCodec(vecCol: String, encCol: String, dim: Int,
+      books: Array[Array[(Int, Array[Double])]]): Codec = {
+    val m = books.length
+    Codec(pqEncode(_, encCol, dim, books),
+      (0 until m).map(s => col(s"code_$s")) :+ col("recon_n2_fp"),
+      df => withPqLuts(df.withColumn("qnrm", norm(col(vecCol))), vecCol,
+        dim / m, books),
+      col("qnrm") +: (0 until m).map(s => col(s"lut_$s")),
+      Seq("adc_fp" -> pqAdcFp(m), "adc_cosine" -> adcCosineGuarded))
+  }
+
+  /** Broadcast all-pairs candidates: every corpus row × the broadcast
+    * query set. `excludeSelf` drops neighbor_id == query_id pairs. */
+  private def allPairs(corpus: DataFrame, queries: DataFrame, idCol: String,
+      codec: Codec, excludeSelf: Boolean): DataFrame =
+    codec.corpus(corpus).select(col(idCol) +: codec.cCols: _*)
+      .crossJoin(broadcast(codec.query(queries)
+        .select(col(idCol).as("query_id") +: codec.qCols: _*)))
+      .filter(if (excludeSelf) col(idCol) =!= col("query_id") else lit(true))
+
+  /** LSH candidates: same bucket in any table, one equi-join on (tbl,
+    * bucket). The codec's columns attach BEFORE the bucket explode (once
+    * per vector, not once per table); pair dedup across tables is the
+    * first-collision filter on the join output (map-side — no exchange
+    * over the candidate stream, which is what dropDuplicates paid). */
+  private def bucketPairs(corpus: DataFrame, queries: DataFrame,
+      idCol: String, vecCol: String, codec: Codec, dim: Int, bits: Int,
+      tables: Int, seed: Long): DataFrame = {
+    def side(df: DataFrame, id: Column, sig: String, cols: Seq[Column]) =
+      explodedBucketsSig(df, vecCol, dim, bits, tables, seed)
+        .select(id +: col("sigv").as(sig) +: col("tbl") +: col("bucket") +:
+          cols: _*)
+    side(codec.corpus(corpus), col(idCol), "sigv", codec.cCols)
+      .join(side(codec.query(queries), col(idCol).as("query_id"), "__qs",
+        codec.qCols), Seq("tbl", "bucket"))
+      .filter(col(idCol) =!= col("query_id") &&
+        firstCollision(col("tbl"), col("sigv"), col("__qs"), bits, tables))
+  }
+
+  /** IVF candidates: the corpus is assigned to its nearest cell once, each
+    * query explodes into its `nprobe` nearest cells ([[probeCells]]), and
+    * candidates gather by an EQUI-JOIN on cid — never a product. */
+  private def cellPairs(corpus: DataFrame, queries: DataFrame, idCol: String,
+      vecCol: String, codec: Codec, centroids: Array[(Int, Array[Double])],
+      nprobe: Int): DataFrame = {
+    // corpus side first: assign() registers NearestCells past 32 cells,
+    // which the probe list below resolves against
+    val indexed = codec.corpus(assign(corpus, vecCol, centroids))
+      .select(col(idCol) +: col("cid") +: codec.cCols: _*)
+    val probed = codec.query(queries)
+      .select(col(idCol).as("query_id") +: codec.qCols :+
+        explode(probeCells(col(vecCol), centroids, nprobe)).as("cid"): _*)
+    indexed
+      .join(codec.perProbe.foldLeft(probed) { case (df, (n, c)) =>
+        df.withColumn(n, c) }, Seq("cid"))
+      .filter(col(idCol) =!= col("query_id"))
+  }
+
+  /** The `nprobe` nearest cell ids of `vec`, nearest first. Same 32-cell
+    * switch as [[cidExpr]]: the sorted literal-struct array and
+    * NearestCells order identically (dot desc, ties to the lowest cid),
+    * and NaN dots sort LAST (nanvl to +Infinity on the negated dot, as
+    * if -Infinity), matching NearestCells. */
+  private def probeCells(vec: Column, centroids: Array[(Int, Array[Double])],
+      nprobe: Int): Column =
+    if (centroids.length > 32) {
+      val cidOf = array(centroids.map(c => lit(c._1)): _*)
+      transform(GraftFunctions.nearestCells(vec, centroids.map(_._2), nprobe),
+        i => element_at(cidOf, i + 1))
+    } else {
+      val probeScores = centroids.map { case (cid, c) =>
+        struct(nanvl(GraftFunctions.dotProduct(vec,
+          array(c.map(lit(_)): _*)) * -1,
+          lit(Double.PositiveInfinity)).as("negd"), lit(cid).as("cid"))
+      }
+      transform(slice(array_sort(array(probeScores: _*)), 1, nprobe),
+        s => s.getField("cid"))
+    }
+
+  /** The one top-k tail: the codec's scores over the candidate pairs,
+    * then row_number per query_id by (last score desc, neighbor_id) and
+    * rank ≤ k. Returns (query_id, neighbor_id, scores…, rank). */
+  private def rankTopK(cands: DataFrame, idCol: String, codec: Codec,
+      k: Int): DataFrame = {
+    val w = Window.partitionBy("query_id")
+      .orderBy(col(codec.scores.last._1).desc, col("neighbor_id"))
+    codec.scores.foldLeft(cands) { case (df, (n, c)) => df.withColumn(n, c) }
+      .select(col("query_id") +: col(idCol).as("neighbor_id") +:
+        codec.scores.map(s => col(s._1)): _*)
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+  }
+
+  /** (cells, trainCap) of an IVF-style entry: `n > 0` is a fixed cell
+    * count trained over the whole corpus; `n = 0` is the 100 TB mode —
+    * cells ≈ √N (autoCells) with Lloyd over the bounded md5 sample. */
+  private def cellsAndCap(corpus: DataFrame, idCol: String, n: Int,
+      trainCap: Int): (Int, Int) =
+    if (n > 0) (n, 0) else (autoCells(corpus.select(idCol).count()), trainCap)
+
   /** ANN top-k: candidates = same bucket in any table, re-ranked by exact
     * cosine. Recall grows with `tables`, cost shrinks with `bits`.
     * `bits = 0` sizes the signature from the corpus count (autoBits) so
@@ -137,34 +285,9 @@ object VectorSearch {
       tables: Int = 4, seed: Long = 42L, bucketTarget: Int = 256): DataFrame = {
     val b = if (bits > 0) bits
       else autoBits(corpus.select(idCol).count(), bucketTarget)
-    // norms BEFORE the bucket explode — once per vector, not once per
-    // table; pair dedup across tables is the first-collision filter on
-    // the join output (map-side — no exchange over the candidate stream
-    // carrying both vectors, which is what dropDuplicates paid)
-    val c = explodedBucketsSig(
-      corpus.withColumn("nrm",
-        sqrt(GraftFunctions.dotProduct(col(vecCol), col(vecCol)))),
-      vecCol, dim, b, tables, seed)
-    val q = explodedBucketsSig(
-      queries.withColumn("qnrm",
-        sqrt(GraftFunctions.dotProduct(col(vecCol), col(vecCol)))),
-      vecCol, dim, b, tables, seed)
-      .select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
-        col("qnrm"), col("sigv").as("__qs"), col("tbl"), col("bucket"))
-    val candidates = c
-      .join(q, Seq("tbl", "bucket"))
-      .filter(col(idCol) =!= col("query_id") &&
-        firstCollision(col("tbl"), col("sigv"), col("__qs"), b, tables))
-      .select(col("query_id"), col("qvec"), col("qnrm"),
-        col(idCol).as("neighbor_id"), col(vecCol).as("nvec"), col("nrm"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    candidates
-      .withColumn("cosine",
-        GraftFunctions.dotProduct(col("qvec"), col("nvec")) /
-          (col("qnrm") * col("nrm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    val codec = f64Codec(vecCol)
+    rankTopK(bucketPairs(corpus, queries, idCol, vecCol, codec, dim, b,
+        tables, seed), idCol, codec, k)
       .select("query_id", "neighbor_id", "rank", "cosine")
   }
 
@@ -188,8 +311,7 @@ object VectorSearch {
       dim: Int, threshold: Double, bits: Int = 0, tables: Int = 6,
       seed: Long = 42L): DataFrame = {
     val b = if (bits > 0) bits else autoBits(corpus.select(idCol).count())
-    val withNorm = corpus.withColumn("nrm",
-      sqrt(GraftFunctions.dotProduct(col(vecCol), col(vecCol))))
+    val withNorm = corpus.withColumn("nrm", norm(col(vecCol)))
     // candidate generation and dedup run on slim (id, sigv, tbl, bucket)
     // rows — shuffling two dim-sized arrays per candidate through the
     // join costs more than the verification itself (measured 15× on the
@@ -444,11 +566,12 @@ object VectorSearch {
     * (cells × dim)-node expression tree breaks codegen, so the matrix
     * moves into the native NearestCells expression (one referenced
     * double[][], tight loop); ties resolve to the lowest array position
-    * in both forms, and kmeansCentroids emits centroids cid-ascending. */
+    * in both forms, and kmeansCentroids emits centroids cid-ascending.
+    * The cell id lands in `out` (default `cid`). */
   private def assign(df: DataFrame, vecCol: String,
-      centroids: Array[(Int, Array[Double])]): DataFrame = {
+      centroids: Array[(Int, Array[Double])], out: String = "cid"): DataFrame = {
     if (centroids.length > 32) GraftFunctions.register(df.sparkSession)
-    df.withColumn("cid", cidExpr(col(vecCol), centroids))
+    df.withColumn(out, cidExpr(col(vecCol), centroids))
   }
 
   /** Nearest-centroid cell id of `vec` as a pure Column — the shared
@@ -584,9 +707,7 @@ object VectorSearch {
       threshold: Double, k: Int = 0, iters: Int = 2,
       trainCap: Int = DefaultTrainCap,
       tier2CellBound: Int = SemDedupTier2CellBound): DataFrame = {
-    val (cells, cap) =
-      if (k > 0) (k, 0)
-      else (autoCells(corpus.select(idCol).count()), trainCap)
+    val (cells, cap) = cellsAndCap(corpus, idCol, k, trainCap)
     val centroids = kmeansCentroids(corpus, idCol, vecCol, cells, iters, cap)
     val assigned = assign(corpus, vecCol, centroids)
       .select(col(idCol), col("cid"), col(vecCol))
@@ -609,8 +730,7 @@ object VectorSearch {
     // per cell — bounded well below the corpus under mass duplication.
     val reps = assigned.groupBy(col("cid"), col(vecCol))
       .agg(min(col(idCol)).as("__rid"))
-      .withColumn("__nrm",
-        sqrt(GraftFunctions.dotProduct(col(vecCol), col(vecCol))))
+      .withColumn("__nrm", norm(col(vecCol)))
       .cache()
     // adaptive tier-2 trigger: the per-cell rep counts are a ≤|cells|-row
     // aggregate of the cached rep frame; max is a driver-side scalar
@@ -694,46 +814,11 @@ object VectorSearch {
   def ivfCosine(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int = 10, nCells: Int = 16, nprobe: Int = 3,
       iters: Int = 2, trainCap: Int = DefaultTrainCap): DataFrame = {
-    val (cells, cap) =
-      if (nCells > 0) (nCells, 0)
-      else (autoCells(corpus.select(idCol).count()), trainCap)
-    val centroids = kmeansCentroids(corpus, idCol, vecCol, cells, iters, cap)
-    val indexed = assign(corpus, vecCol, centroids)
-      .withColumn("nrm", sqrt(GraftFunctions.dotProduct(col(vecCol), col(vecCol))))
-    // per query: nprobe nearest centroids
-    // per-query probe list: same 32-cell switch as assign() — the sorted
-    // literal-struct array and NearestCells order identically (dot desc,
-    // ties to the lowest cid)
-    val probeCol =
-      if (centroids.length > 32) {
-        val cidOf = array(centroids.map(c => lit(c._1)): _*)
-        transform(GraftFunctions.nearestCells(col(vecCol),
-          centroids.map(_._2), nprobe), i => element_at(cidOf, i + 1))
-      } else {
-        // nanvl: NaN dots sort LAST (as if -Infinity), matching
-        // NearestCells — see assign() above
-        val probeScores = centroids.map { case (cid, c) =>
-          struct(nanvl(GraftFunctions.dotProduct(col(vecCol),
-            array(c.map(lit(_)): _*)) * -1,
-            lit(Double.PositiveInfinity)).as("negd"), lit(cid).as("cid"))
-        }
-        transform(slice(array_sort(array(probeScores: _*)), 1, nprobe),
-          s => s.getField("cid"))
-      }
-    val probed = queries
-      .withColumn("qnrm", sqrt(GraftFunctions.dotProduct(col(vecCol), col(vecCol))))
-      .select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
-        col("qnrm"), explode(probeCol).as("cid"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    indexed.join(probed, Seq("cid"))
-      .filter(col(idCol) =!= col("query_id"))
-      .withColumn("cosine",
-        GraftFunctions.dotProduct(col("qvec"), col(vecCol)) /
-          (col("qnrm") * col("nrm")))
-      .select(col("query_id"), col(idCol).as("neighbor_id"), col("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    val (cells, cap) = cellsAndCap(corpus, idCol, nCells, trainCap)
+    val codec = f64Codec(vecCol)
+    rankTopK(cellPairs(corpus, queries, idCol, vecCol, codec,
+      kmeansCentroids(corpus, idCol, vecCol, cells, iters, cap), nprobe),
+      idCol, codec, k)
   }
 
   /** IVF with int8-quantized re-rank — the memory-bounded 100 TB shape:
@@ -746,44 +831,11 @@ object VectorSearch {
   def ivfCosineInt8(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int = 10, nCells: Int = 16, nprobe: Int = 3,
       iters: Int = 2, trainCap: Int = DefaultTrainCap): DataFrame = {
-    val (cells, cap) =
-      if (nCells > 0) (nCells, 0)
-      else (autoCells(corpus.select(idCol).count()), trainCap)
-    val centroids = kmeansCentroids(corpus, idCol, vecCol, cells, iters, cap)
-    val indexed = quantizeInt8(assign(corpus, vecCol, centroids), vecCol)
-      .withColumn("nrm", sqrt(GraftFunctions.dotProduct(col(vecCol), col(vecCol))))
-      .select(col(idCol), col("cid"), col("q"), col("scale"), col("nrm"))
-    val probeCol =
-      if (centroids.length > 32) {
-        val cidOf = array(centroids.map(c => lit(c._1)): _*)
-        transform(GraftFunctions.nearestCells(col(vecCol),
-          centroids.map(_._2), nprobe), i => element_at(cidOf, i + 1))
-      } else {
-        val probeScores = centroids.map { case (cid, c) =>
-          struct(nanvl(GraftFunctions.dotProduct(col(vecCol),
-            array(c.map(lit(_)): _*)) * -1,
-            lit(Double.PositiveInfinity)).as("negd"), lit(cid).as("cid"))
-        }
-        transform(slice(array_sort(array(probeScores: _*)), 1, nprobe),
-          s => s.getField("cid"))
-      }
-    val probed = quantizeInt8(queries, vecCol)
-      .withColumn("qnrm", sqrt(GraftFunctions.dotProduct(col(vecCol), col(vecCol))))
-      .select(col(idCol).as("query_id"), col("q").as("qq"),
-        col("scale").as("qscale"), col("qnrm"),
-        explode(probeCol).as("cid"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("qcos").desc, col("neighbor_id"))
-    indexed.join(probed, Seq("cid"))
-      .filter(col(idCol) =!= col("query_id"))
-      .withColumn("dot_q", quantizedDot("qq", "q"))
-      .withColumn("qcos",
-        col("dot_q").cast("double") * col("qscale") * col("scale") /
-          (col("qnrm") * col("nrm")))
-      .select(col("query_id"), col(idCol).as("neighbor_id"),
-        col("dot_q"), col("qcos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    val (cells, cap) = cellsAndCap(corpus, idCol, nCells, trainCap)
+    val codec = int8Codec(vecCol)
+    rankTopK(cellPairs(corpus, queries, idCol, vecCol, codec,
+      kmeansCentroids(corpus, idCol, vecCol, cells, iters, cap), nprobe),
+      idCol, codec, k)
   }
 
   /** Exact brute-force cosine top-k (broadcast query set).
@@ -792,21 +844,9 @@ object VectorSearch {
     * merely collide with corpus ids. */
   def bruteForceCosine(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int = 10, excludeSelf: Boolean = true): DataFrame = {
-    val c = corpus
-      .withColumn("nrm", sqrt(GraftFunctions.dotProduct(col(vecCol), col(vecCol))))
-    val q = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qvec"))
-      .withColumn("qnrm", sqrt(GraftFunctions.dotProduct(col("qvec"), col("qvec"))))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    c.crossJoin(broadcast(q))
-      .filter(if (excludeSelf) col(idCol) =!= col("query_id") else lit(true))
-      .withColumn("cosine",
-        GraftFunctions.dotProduct(col("qvec"), col(vecCol)) /
-          (col("qnrm") * col("nrm")))
-      .select(col("query_id"), col(idCol).as("neighbor_id"), col("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    val codec = f64Codec(vecCol)
+    rankTopK(allPairs(corpus, queries, idCol, codec, excludeSelf), idCol,
+      codec, k)
   }
 
   /** Symmetric int8 quantization: per-vector scale = max|x| / 127,
@@ -899,13 +939,11 @@ object VectorSearch {
       books: Array[Array[(Int, Array[Double])]]): DataFrame = {
     val m = books.length
     val dsub = dim / m
-    var out = corpus
-    (0 until m).foreach { sub =>
-      out = assign(
-        out.withColumn("_sv", slice(col(vecCol), sub * dsub + 1, dsub)),
-        "_sv", books(sub))
-        .withColumnRenamed("cid", s"code_$sub")
-        .drop("_sv")
+    // codes land straight in code_{sub}: an input `cid` column (the IVF
+    // coarse cell) passes through untouched
+    val out = (0 until m).foldLeft(corpus) { (acc, sub) =>
+      assign(acc.withColumn("_sv", slice(col(vecCol), sub * dsub + 1, dsub)),
+        "_sv", books(sub), s"code_$sub").drop("_sv")
     }
     // Lloyd can empty a cell, leaving cid gaps — slot the literal arrays
     // BY CID (unused slots hold 0, unreachable: assign only emits cids
@@ -979,27 +1017,10 @@ object VectorSearch {
   def pqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, dim: Int, m: Int = 4, k: Int = 16, iters: Int = 2,
       topK: Int = 10, trainCap: Int = 0, excludeSelf: Boolean = true): DataFrame = {
-    val books = pqCodebooks(corpus, idCol, vecCol, dim, m, k, iters, trainCap)
-    val dsub = dim / m
-    val enc = pqEncode(corpus, vecCol, dim, books)
-      .select(col(idCol) +: (0 until m).map(s => col(s"code_$s"))
-        :+ col("recon_n2_fp"): _*)
-    val q0 = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qvec"))
-      .withColumn("qnrm",
-        sqrt(GraftFunctions.dotProduct(col("qvec"), col("qvec"))))
-    val withLuts = withPqLuts(q0, "qvec", dsub, books).drop("qvec")
-    val adcFp = pqAdcFp(books.length)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adc_cosine").desc, col("neighbor_id"))
-    enc.crossJoin(broadcast(withLuts))
-      .filter(if (excludeSelf) col(idCol) =!= col("query_id") else lit(true))
-      .withColumn("adc_fp", adcFp)
-      .withColumn("adc_cosine", adcCosineGuarded)
-      .select(col("query_id"), col(idCol).as("neighbor_id"),
-        col("adc_fp"), col("adc_cosine"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
+    val codec = pqCodec(vecCol, vecCol, dim,
+      pqCodebooks(corpus, idCol, vecCol, dim, m, k, iters, trainCap))
+    rankTopK(allPairs(corpus, queries, idCol, codec, excludeSelf), idCol,
+      codec, topK)
   }
 
   /** IVF + PQ — the IVFADC architecture (Jégou et al., TPAMI 2011 §V)
@@ -1028,50 +1049,9 @@ object VectorSearch {
     val all = kmeansCentroidsSliced(corpus, idCol, vecCol,
       (-1, 0, nCells) +: (0 until m).map(sub => (sub * dsub, dsub, k)),
       iters, trainCap)
-    val centroids = all.head
-    val books = all.tail
-    // shield the coarse cell id: pqEncode's per-subspace assigns each
-    // (re)write a `cid` column and would clobber it
-    val enc = pqEncode(
-        assign(corpus, vecCol, centroids).withColumnRenamed("cid", "__cell"),
-        vecCol, dim, books)
-      .withColumnRenamed("__cell", "cid")
-      .select(col(idCol) +: col("cid") +:
-        (0 until m).map(s => col(s"code_$s")) :+ col("recon_n2_fp"): _*)
-    val probeCol =
-      if (centroids.length > 32) {
-        val cidOf = array(centroids.map(c => lit(c._1)): _*)
-        transform(GraftFunctions.nearestCells(col(vecCol),
-          centroids.map(_._2), nprobe), i => element_at(cidOf, i + 1))
-      } else {
-        val probeScores = centroids.map { case (cid, c) =>
-          struct(nanvl(GraftFunctions.dotProduct(col(vecCol),
-            array(c.map(lit(_)): _*)) * -1,
-            lit(Double.PositiveInfinity)).as("negd"), lit(cid).as("cid"))
-        }
-        transform(slice(array_sort(array(probeScores: _*)), 1, nprobe),
-          s => s.getField("cid"))
-      }
-    // LUTs build on the un-exploded frame (once per query, not per probe)
-    val probed = withPqLuts(
-      queries
-        .withColumn("qnrm",
-          sqrt(GraftFunctions.dotProduct(col(vecCol), col(vecCol))))
-        .select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
-          col("qnrm"), probeCol.as("probes")),
-      "qvec", dsub, books)
-      .withColumn("cid", explode(col("probes")))
-      .drop("qvec", "probes")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adc_cosine").desc, col("neighbor_id"))
-    enc.join(probed, Seq("cid"))
-      .filter(col(idCol) =!= col("query_id"))
-      .withColumn("adc_fp", pqAdcFp(m))
-      .withColumn("adc_cosine", adcCosineGuarded)
-      .select(col("query_id"), col(idCol).as("neighbor_id"),
-        col("adc_fp"), col("adc_cosine"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
+    val codec = pqCodec(vecCol, vecCol, dim, all.tail)
+    rankTopK(cellPairs(corpus, queries, idCol, vecCol, codec, all.head,
+      nprobe), idCol, codec, topK)
   }
 
   /** IVF + PQ with RESIDUAL encoding — IVFADC complete (Jégou et al.,
@@ -1115,14 +1095,14 @@ object VectorSearch {
     def centArr: Column = array((0 to maxCid).map { cid =>
       array(centByCid.getOrElse(cid, Array.fill(dim)(0.0)).map(lit(_)): _*)
     }: _*)
-    val assigned = assign(corpus, vecCol, centroids)
-      .withColumnRenamed("cid", "__cell")
-      .withColumn("__rv", zip_with(col(vecCol),
-        element_at(centArr, col("__cell") + 1), (x, c) => x - c))
+    // residual r = x − c(cell) against the row's assigned coarse cell
+    def residual(df: DataFrame): DataFrame = df.withColumn("__rv",
+      zip_with(col(vecCol), element_at(centArr, col("cid") + 1),
+        (x, c) => x - c))
     // sub-codebooks trained on the RESIDUALS (one set across all cells —
     // the standard IVFADC memory/generality trade, §V)
-    val books = pqCodebooks(assigned, idCol, "__rv", dim, m, k, iters,
-      trainCap)
+    val books = pqCodebooks(residual(assign(corpus, vecCol, centroids)),
+      idCol, "__rv", dim, m, k, iters, trainCap)
     // |x̂|² in exact micro units: per-cell |c|² base + per-(cell, sub,
     // code) cross terms, each a single micro rounding (the oracle
     // replays the identical 2·dot + |cw|² composition)
@@ -1140,53 +1120,22 @@ object VectorSearch {
             microFp(2.0 * dotLR(cSub, cw) + dotLR(cw, cw))).getOrElse(0L))
         }: _*)
       }: _*)
-      element_at(element_at(lit2d, col("__cell") + 1),
-        col(s"code_$sub") + 1)
+      element_at(element_at(lit2d, col("cid") + 1), col(s"code_$sub") + 1)
     }.reduce(_ + _)
-    val enc = pqEncode(assigned, "__rv", dim, books)
-      .withColumn("recon_n2_fp",
-        element_at(baseArr, col("__cell") + 1) + crossN2)
-      .withColumnRenamed("__cell", "cid")
-      .select(col(idCol) +: col("cid") +:
-        (0 until m).map(s => col(s"code_$s")) :+ col("recon_n2_fp"): _*)
-    val probeCol =
-      if (centroids.length > 32) {
-        val cidOf = array(centroids.map(c => lit(c._1)): _*)
-        transform(GraftFunctions.nearestCells(col(vecCol),
-          centroids.map(_._2), nprobe), i => element_at(cidOf, i + 1))
-      } else {
-        val probeScores = centroids.map { case (cid, c) =>
-          struct(nanvl(GraftFunctions.dotProduct(col(vecCol),
-            array(c.map(lit(_)): _*)) * -1,
-            lit(Double.PositiveInfinity)).as("negd"), lit(cid).as("cid"))
-        }
-        transform(slice(array_sort(array(probeScores: _*)), 1, nprobe),
-          s => s.getField("cid"))
-      }
-    // LUTs build on the RAW query vector, once per query; the residual
-    // decomposition only adds the per-probe micro dot(q, c)
-    val probed = withPqLuts(
-      queries
-        .withColumn("qnrm",
-          sqrt(GraftFunctions.dotProduct(col(vecCol), col(vecCol))))
-        .select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
-          col("qnrm"), probeCol.as("probes")),
-      "qvec", dsub, books)
-      .withColumn("cid", explode(col("probes")))
-      .withColumn("qc_fp",
-        round(GraftFunctions.dotProduct(col("qvec"),
-          element_at(centArr, col("cid") + 1)) * 1e6, 0).cast("bigint"))
-      .drop("qvec", "probes")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adc_cosine").desc, col("neighbor_id"))
-    enc.join(probed, Seq("cid"))
-      .filter(col(idCol) =!= col("query_id"))
-      .withColumn("adc_fp", col("qc_fp") + pqAdcFp(m))
-      .withColumn("adc_cosine", adcCosineGuarded)
-      .select(col("query_id"), col(idCol).as("neighbor_id"),
-        col("adc_fp"), col("adc_cosine"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
+    // the PQ codec over the residual, with its reconstruction norm
+    // replaced by the exact |x̂|²; LUTs still build on the RAW query
+    // vector, once per query — the residual decomposition only adds the
+    // per-probe micro dot(q, c)
+    val pq = pqCodec(vecCol, "__rv", dim, books)
+    val codec = pq.copy(
+      corpus = df => pq.corpus(residual(df)).withColumn("recon_n2_fp",
+        element_at(baseArr, col("cid") + 1) + crossN2),
+      qCols = pq.qCols :+ col(vecCol).as("qvec"),
+      perProbe = Seq("qc_fp" -> round(GraftFunctions.dotProduct(col("qvec"),
+        element_at(centArr, col("cid") + 1)) * 1e6, 0).cast("bigint")),
+      scores = ("adc_fp" -> (col("qc_fp") + pqAdcFp(m))) +: pq.scores.tail)
+    rankTopK(cellPairs(corpus, queries, idCol, vecCol, codec, centroids,
+      nprobe), idCol, codec, topK)
   }
 
   /** Brute-force top-k over int8-quantized vectors (broadcast query set).
@@ -1195,24 +1144,8 @@ object VectorSearch {
     * a quantized index. Ranking ties break by neighbor_id. */
   def quantizedTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int = 10): DataFrame = {
-    val c = quantizeInt8(corpus, vecCol)
-      .withColumn("nrm", sqrt(GraftFunctions.dotProduct(col(vecCol), col(vecCol))))
-      .select(col(idCol), col("q"), col("scale"), col("nrm"))
-    val q = quantizeInt8(queries, vecCol)
-      .withColumn("qnrm", sqrt(GraftFunctions.dotProduct(col(vecCol), col(vecCol))))
-      .select(col(idCol).as("query_id"), col("q").as("qq"),
-        col("scale").as("qscale"), col("qnrm"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("qcos").desc, col("neighbor_id"))
-    c.crossJoin(broadcast(q))
-      .filter(col(idCol) =!= col("query_id"))
-      .withColumn("dot_q", quantizedDot("qq", "q"))
-      .withColumn("qcos",
-        col("dot_q").cast("double") * col("qscale") * col("scale") /
-          (col("qnrm") * col("nrm")))
-      .select(col("query_id"), col(idCol).as("neighbor_id"),
-        col("dot_q"), col("qcos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    val codec = int8Codec(vecCol)
+    rankTopK(allPairs(corpus, queries, idCol, codec, excludeSelf = true),
+      idCol, codec, k)
   }
 }

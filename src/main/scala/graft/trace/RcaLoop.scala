@@ -223,8 +223,10 @@ object RcaLoop {
           (-col("n")).as("k"), col("event").as("e"),
           concat_ws("=", col("event"), col("n")).as("s")))),
           x => x.getField("s")), ",")))
+      // sum over zero groups is NULL, and one NULL concat arg nulls the
+      // whole string — an empty input reads "n=0 first= last="
       val spanBranch = s1(2, "time_span", sevEvt.agg(concat(
-        lit("n="), sum(col("n")),
+        lit("n="), coalesce(sum(col("n")), lit(0L)),
         lit(" first="), coalesce(
           unix_timestamp(min(col("mn"))).cast("string"), lit("")),
         lit(" last="), coalesce(

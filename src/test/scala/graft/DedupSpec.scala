@@ -327,6 +327,28 @@ class DedupSpec extends SparkSpec {
     got.foreach(r => assert(r.getSeq[String](0) === r.getSeq[String](1)))
   }
 
+  /** graft_gram_hashes with literal `k` must fail with a descriptive
+    * IllegalArgumentException that names the argument. */
+  private def assertGramHashesRejectsK(k: String): Unit = {
+    graft.functions.TextFunctions.register(spark)
+    val e = intercept[Throwable] {
+      spark.sql(s"SELECT graft_gram_hashes('a b c d', $k, true, false)")
+        .collect()
+    }
+    val chain = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+      String.valueOf(c.getMessage).contains("graft_gram_hashes k")),
+      s"k=$k: $e")
+  }
+
+  test("graft_gram_hashes: NULL literal k fails descriptively, not with an NPE") {
+    assertGramHashesRejectsK("NULL")
+  }
+
+  test("graft_gram_hashes: non-integer literal k fails descriptively") {
+    assertGramHashesRejectsK("3.0")
+  }
+
   test("GraftExtensions registers native functions at session build") {
     spark.sparkContext // ensure the shared context exists first
     // getOrCreate would hand back the active session (whose extensions are

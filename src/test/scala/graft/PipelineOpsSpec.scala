@@ -54,6 +54,55 @@ class PipelineOpsSpec extends SparkSpec {
     assert(recall >= 0.9, s"IVF recall $recall too low")
   }
 
+  test("ANN contract: pinned output columns; full-probe IVF == all-pairs per codec") {
+    GraftFunctions.register(spark)
+    val rng = new scala.util.Random(29)
+    val centers = Array.fill(6)(Array.fill(8)(rng.nextGaussian() * 5))
+    val vecs = (0 until 120).map { i =>
+      val c = centers(i % 6)
+      (i.toLong, c.map(x => x + rng.nextGaussian() * 0.3).toSeq)
+    }
+    val df = vecs.toDF("vec_id", "e").cache()
+    val queries = df.filter(col("vec_id") < 6)
+    // callers read results by position: names AND order are the contract
+    val f64 = "query_id,neighbor_id,cosine,rank"
+    val int8 = "query_id,neighbor_id,dot_q,qcos,rank"
+    val adc = "query_id,neighbor_id,adc_fp,adc_cosine,rank"
+    Seq(
+      "annCosine" -> (VectorSearch.annCosine(df, queries, "vec_id", "e",
+        dim = 8), "query_id,neighbor_id,rank,cosine"),
+      "ivfCosine" -> (VectorSearch.ivfCosine(df, queries, "vec_id", "e"), f64),
+      "ivfCosineInt8" ->
+        (VectorSearch.ivfCosineInt8(df, queries, "vec_id", "e"), int8),
+      "bruteForceCosine" ->
+        (VectorSearch.bruteForceCosine(df, queries, "vec_id", "e"), f64),
+      "quantizedTopK" ->
+        (VectorSearch.quantizedTopK(df, queries, "vec_id", "e"), int8),
+      "pqTopK" -> (VectorSearch.pqTopK(df, queries, "vec_id", "e", dim = 8),
+        adc),
+      "ivfPqTopK" ->
+        (VectorSearch.ivfPqTopK(df, queries, "vec_id", "e", dim = 8), adc),
+      "ivfPqResTopK" ->
+        (VectorSearch.ivfPqResTopK(df, queries, "vec_id", "e", dim = 8), adc)
+    ).foreach { case (name, (res, want)) =>
+      assert(res.columns.mkString(",") === want, name)
+    }
+    // probing every cell makes the IVF candidate set the full corpus, so
+    // under the same codec the cell join must return EXACTLY the rows of
+    // the broadcast all-pairs form — scores and ranks included
+    val c = 8
+    val exact = VectorSearch.bruteForceCosine(df, queries, "vec_id", "e", 10)
+      .collect().toSet
+    assert(exact.size === 6 * 10)
+    assert(VectorSearch.ivfCosine(df, queries, "vec_id", "e", k = 10,
+      nCells = c, nprobe = c).collect().toSet === exact)
+    val exact8 = VectorSearch.quantizedTopK(df, queries, "vec_id", "e", 10)
+      .collect().toSet
+    assert(exact8.size === 6 * 10)
+    assert(VectorSearch.ivfCosineInt8(df, queries, "vec_id", "e", k = 10,
+      nCells = c, nprobe = c).collect().toSet === exact8)
+  }
+
   test("PQ-ADC: codes bounded, adc_fp exactly recomputable, clustered top-k pure") {
     GraftFunctions.register(spark)
     val rng = new scala.util.Random(11)

@@ -22,6 +22,18 @@ private object ScriptedClient {
   val calls = new java.util.concurrent.atomic.AtomicInteger(0)
 }
 
+/** Records every prompt it is sent (JVM-wide: the client runs inside a
+  * Spark task) and answers with a fixed low confidence. */
+private class RecordingClient extends LlmBoundary.LlmClient {
+  def complete(prompts: Seq[String]): Seq[String] = prompts.map { p =>
+    RecordingClient.prompts.add(p)
+    """{"hypothesis": "unsure", "confidence": 0.1}"""
+  }
+}
+private object RecordingClient {
+  val prompts = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+}
+
 private class LowConfidenceClient extends LlmBoundary.LlmClient {
   def complete(prompts: Seq[String]): Seq[String] =
     prompts.map(_ => """{"hypothesis": "unsure", "confidence": 0.1}""")
@@ -80,6 +92,23 @@ class RcaLoopSpec extends SparkSpec {
       RcaLoop.Config(maxIterations = 8)).collect()
     assert(t.length < 8)
     assert(t.last.getAs[String]("stop_reason") === "stalled")
+  }
+
+  test("empty events: time_span evidence reads n=0, not NULL") {
+    // an empty frame with the ingest schema (the repo-owned plaintext
+    // fixture only supplies the schema)
+    val schema = trace.TraceEvents.load(spark,
+      graft.queries.TraceQueries.PlaintextFixture).schema
+    val events = spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+    RecordingClient.prompts.clear()
+    val t = RcaLoop.investigate(events, "?", new RecordingClient,
+      RcaLoop.Config(maxIterations = 3)).collect()
+    assert(t.head.getAs[String]("phase") === "A")
+    val prompts = RecordingClient.prompts.toArray.map(_.toString)
+    assert(prompts.nonEmpty, "phase B must consult the model once")
+    assert(prompts.forall(_.contains("time_span: n=0 first= last=")),
+      prompts.head)
   }
 
   test("confidence shaping mirrors the reference's three rules") {
